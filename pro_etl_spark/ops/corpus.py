@@ -27,7 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, SparkSession, Window
 from pyspark.sql import DataFrame
 
-from pro_etl_spark.io import load
+from pro_etl_spark.io import dataset_memo, load
 from pro_etl_spark.ops.dedup import (
     _CLUSTERS_CTE,
     _LSH_PAIRS_CTE,
@@ -1507,15 +1507,6 @@ SUBSTR_PROBE_CAP = 1_000_000
 #: regardless of document length, and safe × 32 concurrent tasks
 _SUBSTR_CHUNK = 100_000
 
-#: collected probe list per (app, dataset) — bounded (eval-set-sized)
-#: driver model state, memoized so repeat constructions stay lazy
-_SUBSTR_PROBES_MEMO: dict = {}
-
-from pro_etl_spark.io import DATASET_MEMOS as _DATASET_MEMOS  # noqa: E402
-
-_DATASET_MEMOS.append(_SUBSTR_PROBES_MEMO)
-
-
 @register(
     "decontaminate_substring",
     oracle=f"""
@@ -1549,33 +1540,28 @@ def decontaminate_substring(spark: SparkSession, d: str) -> DataFrame:
     catch wholesale copy-paste of answer keys — GPT-3 and Llama both
     report the pair).
 
-    SCALE REWRITE history (this is the probe's most-iterated key):
-    - round 7: the first cut broadcast the probes and streamed the
-      corpus past contains() — a BroadcastNestedLoopJoin, O(docs ×
-      probes), 118 s at the 10× layout.
-    - rounds 7-10: declarative Rabin-Karp — explode each training doc
-      to its {SUBSTR_PROBE_LEN}-char windows in-row and equi-join the
-      (broadcast) probe set: 40-46 s at 10×. Profiling (round 11)
-      showed the time is NOT byte volume but per-window HOF lambda
-      overhead: hashing the windows (60→8 bytes) inside the transform
-      only moved 10× from 41→34 s, and a bare 8-char variant 27 s.
-    - round 11 (current): vectorized Rabin-Karp in ``mapInPandas`` —
-      one Arrow pass over the corpus; per doc, numpy computes all
-      window hashes as a strided uint64 dot product, prefilters
-      against the (bounded, eval-set-sized) probe-hash array, and
-      VERIFIES each candidate by exact string membership in the probe
-      set before it counts, so hash collisions cannot change the
-      answer in either direction (containment ⇒ its own window hash
-      matches ⇒ never missed; spurious matches die at the string
-      check). 10.4 s at 10× (4× over the declarative form), value
-      parity exact at sf0.1 and 10×.
+    Design: vectorized Rabin-Karp in ``mapInPandas`` — one Arrow pass
+    over the corpus; per doc, numpy computes all window hashes as a
+    strided uint64 dot product, prefilters against the (bounded,
+    eval-set-sized) probe-hash array, and VERIFIES each candidate by
+    exact string membership in the probe set before it counts, so hash
+    collisions cannot change the answer in either direction
+    (containment ⇒ its own window hash matches ⇒ never missed;
+    spurious matches die at the string check). Measured at the 10×
+    layout: 10.4 s, against 118 s for broadcasting the probes past
+    contains() (a BroadcastNestedLoopJoin, O(docs × probes)) and
+    40-46 s for the declarative form that explodes each doc to its
+    {SUBSTR_PROBE_LEN}-char windows in-row and equi-joins the probe
+    set — whose cost is per-window higher-order-lambda overhead, not
+    byte volume (hashing the windows inside the transform only moved
+    it from 41 to 34 s). Value parity is exact at sf0.1 and 10×.
 
     Scale: one narrow corpus pass (Arrow-batched, numpy-vectorized —
     no per-row Python), window memory bounded by _SUBSTR_CHUNK
     regardless of document length, probe state O(eval set) shipped in
     the closure (same bounded-broadcast contract as
     ``decontaminate_ngrams``' eval shingles; a benchmark-suite probe
-    set is KBs). HONESTY NOTE (ADVICE_r11): under THIS synthetic data
+    set is KBs). Note: under THIS synthetic data
     model the "eval set" is doc_id % DECON_EVAL_MOD — 1/50 of the
     whole corpus — so the collected probe list grows O(corpus), not
     O(benchmark); real decontamination runs carry a fixed benchmark
@@ -1588,9 +1574,8 @@ def decontaminate_substring(spark: SparkSession, d: str) -> DataFrame:
     docs = load(spark, d, "documents")
     min_len = SUBSTR_PROBE_START + SUBSTR_PROBE_LEN - 1
     L = SUBSTR_PROBE_LEN
-    key = (spark.sparkContext.applicationId, d)
-    probes = _SUBSTR_PROBES_MEMO.get(key)
-    if probes is None:
+
+    def collect_probes():
         probes = sorted(
             r.probe
             for r in docs.where(
@@ -1614,7 +1599,9 @@ def decontaminate_substring(spark: SparkSession, d: str) -> DataFrame:
                 "longer holds at this corpus/eval ratio — shrink the "
                 "probe set or raise the cap deliberately"
             )
-        _SUBSTR_PROBES_MEMO[key] = probes
+        return probes
+
+    probes = dataset_memo(spark, d, "substr_probes", collect_probes)
 
     # polynomial window hash over code points (utf-32 decode matches
     # Spark's code-point substring semantics on every plane); uint64

@@ -20,7 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from pro_etl_spark.io import DATASET_MEMOS, load
+from pro_etl_spark.io import dataset_memo, load
 from pro_etl_spark.ops.hashing import DUCK_HASH60, hash60
 from pro_etl_spark.registry import register
 
@@ -37,12 +37,7 @@ SIMHASH_BITS = 32
 SIMHASH_MAX_HAMMING = 3
 COSINE_THRESHOLD = 0.8
 
-#: converged cluster labelings memoized per (Spark application, dataset)
-#: — see ``dedup_clusters``
-_CLUSTERS_MEMO: dict = {}
-DATASET_MEMOS.append(_CLUSTERS_MEMO)
-
-#: Sampled certification (round 10): the EXACT pairwise truth
+#: Sampled certification: the EXACT pairwise truth
 #: baselines behind the recall-certification keys (`dedup_lsh_eval`,
 #: `dedup_shingle_lsh_eval`, `dedup_srp_eval`, and the
 #: `dedup_ngram_jaccard` baseline they lean on) are quadratic within
@@ -305,29 +300,6 @@ def _minhash_perms(th60: Column) -> Column:
     )
 
 
-#: shared-builder DataFrame memos (r13): the cached token/shingle/pair
-#: tables were REBUILT as fresh DataFrame objects by every consumer —
-#: the data was cached (CacheManager matches the plan), but each
-#: consumer re-paid Catalyst ANALYSIS of the full builder subtree
-#: (measured: constructing the shingle-LSH pair plan alone is ~1.0 s,
-#: and pipeline_data_funnel spent 4.1 s of its bench row in pure
-#: construction, zero jobs). A DataFrame is immutable, so handing
-#: every consumer the SAME object is semantically identical and pays
-#: the analysis once per session per dataset — the same pattern as
-#: ``_CLUSTERS_MEMO``. Evicted by ``io.invalidate_dataset``.
-_DF_MEMO: dict = {}
-DATASET_MEMOS.append(_DF_MEMO)
-
-
-def _df_memo(spark: SparkSession, d: str, tag: str, build):
-    key = (spark.sparkContext.applicationId, d, tag)
-    df = _DF_MEMO.get(key)
-    if df is None:
-        df = build()
-        _DF_MEMO[key] = df
-    return df
-
-
 def _token_table(spark: SparkSession, d: str) -> DataFrame:
     """Cached (doc_id, source, ts, th60) table: token sets + raw 60-bit
     token hashes (one md5 per token), computed once per session per
@@ -338,7 +310,7 @@ def _token_table(spark: SparkSession, d: str) -> DataFrame:
     evaluate it once per (token, permutation) — 16× the hashing for
     MinHash, 32× for SimHash (measured: sf0.1 LSH 5.1 s → 3.3 s). At
     100 TB this is the persisted tokenization table next to the corpus."""
-    return _df_memo(
+    return dataset_memo(
         spark, d, "token_table",
         lambda: (
             load(spark, d, "documents")
@@ -408,7 +380,7 @@ _LSH_PAIRS_CTE = f"""
       FROM capped a JOIN capped b
         ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
       GROUP BY a.doc_id, b.doc_id
-    ), pairs AS (
+    ), pairs AS MATERIALIZED (
       -- verification intersects the 60-bit token-hash sets, not the
       -- token strings: both engines hash with the identical md5-based
       -- map (DUCK_HASH60 == Spark hash60 by construction), so the
@@ -543,7 +515,7 @@ def dedup_minhash_lsh(spark: SparkSession, d: str) -> DataFrame:
         # pipeline_clean_corpus, and graph_pagerank in the same session
         # — Spark's CacheManager matches the identical plan, so LSH
         # runs once per dataset (at 100 TB this is the persisted pair
-        # table). _df_memo (r13) additionally hands every consumer the
+        # table). dataset_memo additionally hands every consumer the
         # same DataFrame object, so the pair PLAN is analyzed once too.
         return (
             sized.where(jac >= JACCARD_THRESHOLD)
@@ -551,7 +523,7 @@ def dedup_minhash_lsh(spark: SparkSession, d: str) -> DataFrame:
             .cache()
         )
 
-    return _df_memo(spark, d, "minhash_lsh_pairs", build)
+    return dataset_memo(spark, d, "minhash_lsh_pairs", build)
 
 
 #: near-containment threshold (|A∩B| / min|A|,|B|): higher than the
@@ -627,7 +599,7 @@ def _simhash_table(spark: SparkSession, d: str) -> DataFrame:
     interpreted vote-fold runs once per session per dataset and all
     three SimHash operators (fingerprints, blocked pairs, Hamming-LSH)
     read the cached result instead of re-folding per join side."""
-    return _df_memo(
+    return dataset_memo(
         spark, d, "simhash_table",
         lambda: (
             _token_table(spark, d)
@@ -855,14 +827,12 @@ def dedup_clusters(spark: SparkSession, d: str) -> DataFrame:
     cache matching — memoizing the driver loop's output avoids running
     LSH + propagation twice per sweep.
     """
-    memo_key = (spark.sparkContext.applicationId, d, "unigram")
-    cached = _CLUSTERS_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
-    pairs = dedup_minhash_lsh(spark, d).select("doc_a", "doc_b")
-    result = _cc_min_label(pairs)
-    _CLUSTERS_MEMO[memo_key] = result
-    return result
+    return dataset_memo(
+        spark, d, ("clusters", "unigram"),
+        lambda: _cc_min_label(
+            dedup_minhash_lsh(spark, d).select("doc_a", "doc_b")
+        ),
+    )
 
 
 def _cc_min_label(pairs: DataFrame) -> DataFrame:
@@ -1005,7 +975,7 @@ def corpus_table(spark: SparkSession, d: str) -> DataFrame:
     2 of 32 cores."""
     par = spark.sparkContext.defaultParallelism
     e = load(spark, d, "embeddings")
-    return _df_memo(
+    return dataset_memo(
         spark, d, "corpus_table",
         lambda: (
             e.select(
@@ -1231,22 +1201,21 @@ def _shingle_table(spark: SparkSession, d: str) -> DataFrame:
     3-shingle hashes — the shingle analogue of ``_token_table`` and the
     base every shingle-LSH operator composes on.
 
-    Hashing strategy (round-7 speedup): md5 runs once per token
+    Hashing strategy: md5 runs once per token
     POSITION (the raw sequence — order matters, so no list_distinct
     before hashing), reduced mod MH_P; each shingle hash is the Horner
     mix of three of those values — three multiply-adds replacing an
     md5 over the concatenated shingle string. Docs under 3 tokens have
     no shingle set and are filtered on both sides.
 
-    r12: the cache barrier moved from the per-token sequence to the
-    FINISHED shingle-hash set. The old shape cached ``th_seq`` and
-    left ``th60`` a single-use projection, so CollapseProject inlined
-    the Horner+``array_distinct`` derivation into every consumer
-    lambda — 16× per row under ``_minhash_perms``, and once per row
-    per JOIN SIDE in ``_lsh_sized_pairs`` and the eval truth joins.
-    ``_let`` binds the token-hash sequence to a lambda variable
-    (evaluated once per row — the in-plan form of the round-6 cache
-    lesson: ``element_at`` into an unbound transform would re-run the
+    The cache barrier sits on the FINISHED shingle-hash set, not on
+    the per-token sequence: caching the sequence leaves ``th60`` a
+    single-use projection, so CollapseProject inlines the
+    Horner+``array_distinct`` derivation into every consumer lambda —
+    16× per row under ``_minhash_perms``, and once per row per JOIN
+    SIDE in ``_lsh_sized_pairs`` and the eval truth joins. ``_let``
+    binds the token-hash sequence to a lambda variable (evaluated once
+    per row: ``element_at`` into an unbound transform would re-run the
     md5 subtree per element), so the whole derivation is one narrow
     pass and every consumer reads the materialized set."""
     from pro_etl_spark.ops.multimodal import _let
@@ -1265,7 +1234,7 @@ def _shingle_table(spark: SparkSession, d: str) -> DataFrame:
             )
         )
 
-    return _df_memo(
+    return dataset_memo(
         spark, d, "shingle_table",
         lambda: (
             load(spark, d, "documents")
@@ -1370,10 +1339,10 @@ def dedup_minhash_shingle_lsh(spark: SparkSession, d: str) -> DataFrame:
             .cache()
         )
 
-    # _df_memo (r13): analyzing this pair plan alone cost ~1.0 s and it
+    # memoized: analyzing this pair plan alone costs ~1.0 s and it
     # is embedded by pipeline_data_funnel, the shingle clusters/eval
     # keys and graph loops — one shared DataFrame object pays it once.
-    return _df_memo(spark, d, "shingle_lsh_pairs", build)
+    return dataset_memo(spark, d, "shingle_lsh_pairs", build)
 
 
 @register(
@@ -1552,14 +1521,12 @@ def dedup_shingle_clusters(spark: SparkSession, d: str) -> DataFrame:
     (one keyed shuffle per round, checkpointed lineage), same
     recursive-CTE oracle — only the pair generator differs. Memoized
     per (session, dataset) like its unigram twin."""
-    memo_key = (spark.sparkContext.applicationId, d, "shingle")
-    cached = _CLUSTERS_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
-    pairs = dedup_minhash_shingle_lsh(spark, d).select("doc_a", "doc_b")
-    result = _cc_min_label(pairs)
-    _CLUSTERS_MEMO[memo_key] = result
-    return result
+    return dataset_memo(
+        spark, d, ("clusters", "shingle"),
+        lambda: _cc_min_label(
+            dedup_minhash_shingle_lsh(spark, d).select("doc_a", "doc_b")
+        ),
+    )
 
 
 @register(

@@ -363,12 +363,13 @@ def graph_kcore(spark: SparkSession, d: str) -> DataFrame:
 LPA_ROUNDS = 3
 
 
-def _lpa_oracle() -> str:
+def _lpa_ctes() -> str:
     """Unroll LPA_ROUNDS synchronous label-propagation updates as
     chained CTEs on the LSH pair graph — count neighbor labels, take
     the (cnt DESC, label ASC) winner per node — mirroring the Spark
-    loop's deterministic tiebreak exactly."""
-    sql = _LSH_PAIRS_CTE + """
+    loop's deterministic tiebreak exactly. Continues a WITH clause
+    that defines ``pairs``; the final labels are ``l{LPA_ROUNDS}``."""
+    sql = """
     , edges AS (
       SELECT doc_a AS src, doc_b AS dst FROM pairs
       UNION ALL SELECT doc_b, doc_a FROM pairs
@@ -388,7 +389,11 @@ def _lpa_oracle() -> str:
         FROM c{i}
       ) WHERE rn = 1
     )"""
-    return sql + f"""
+    return sql
+
+
+def _lpa_oracle() -> str:
+    return _LSH_PAIRS_CTE + _lpa_ctes() + f"""
     SELECT node AS doc_id, CAST(label AS BIGINT) AS community
     FROM l{LPA_ROUNDS}
     """
@@ -701,10 +706,14 @@ def graph_personalized_pagerank(spark: SparkSession, d: str) -> DataFrame:
 
 
 def _modularity_oracle() -> str:
-    from pro_etl_spark.registry import ORACLES
-
-    return _LSH_PAIRS_CTE + f"""
-    , lpa AS ({ORACLES["graph_label_propagation"]}),
+    # the LPA chain continues this oracle's own WITH clause instead of
+    # nesting a second copy of the LSH CTEs: DuckDB 1.0 rejects a
+    # nested duplicate of the MATERIALIZED ``pairs`` CTE
+    return _LSH_PAIRS_CTE + _lpa_ctes() + f"""
+    , lpa AS (
+      SELECT node AS doc_id, CAST(label AS BIGINT) AS community
+      FROM l{LPA_ROUNDS}
+    ),
     m AS (SELECT COUNT(*) AS m FROM pairs),
     deg AS (
       SELECT node, COUNT(*) AS deg FROM (

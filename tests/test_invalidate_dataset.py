@@ -1,12 +1,15 @@
-"""io.invalidate_dataset: the documented eviction point for per-
-dataset model-state memos (ADVICE r8: the `_k_cells` count memo had
-no invalidation — rewriting a dataset dir mid-session left Spark
-training against the old corpus while the SQL oracle recomputed from
-the new one)."""
+"""io.dataset_memo and io.invalidate_dataset: the one per-dataset
+memo and its only eviction point. Without eviction, rewriting a
+dataset dir mid-session leaves Spark training against the old corpus
+(e.g. the `_k_cells` count) while the SQL oracle recomputes from the
+new one."""
 
+import ast
+import pathlib
 import shutil
 
 import pytest
+from conftest import SF_SMOKE
 
 
 @pytest.fixture()
@@ -50,31 +53,62 @@ def test_k_cells_rewrite_needs_invalidate(spark, tmp_dataset):
 
 
 def test_invalidate_evicts_all_registered_memos(spark, tmp_dataset):
-    """Every registered memo keyed on the dataset is evicted, and keys
-    for OTHER datasets survive."""
+    """Every memo entry keyed on the dataset is evicted, whatever its
+    tag or application, and entries for OTHER datasets survive."""
     from pro_etl_spark import io as pio
 
-    sentinel_other = ("appX", "/some/other/ds")
-    for memo in pio.DATASET_MEMOS:
-        memo[("appX", tmp_dataset)] = "stale"
-        memo[("appX", tmp_dataset, "variant")] = "stale"
-        memo[sentinel_other] = "keep"
+    (memo,) = pio.DATASET_MEMOS
+    other = "/some/other/ds"
+    pio.dataset_memo(spark, tmp_dataset, "t", lambda: "stale")
+    pio.dataset_memo(spark, tmp_dataset, ("t", 3), lambda: "stale")
+    memo[("appX", tmp_dataset, "t")] = "stale"
+    pio.dataset_memo(spark, other, "t", lambda: "keep")
     pio.invalidate_dataset(spark, tmp_dataset)
-    for memo in pio.DATASET_MEMOS:
-        assert ("appX", tmp_dataset) not in memo
-        assert ("appX", tmp_dataset, "variant") not in memo
-        assert memo.pop(sentinel_other) == "keep"
+    assert not [k for k in memo if k[1] == tmp_dataset]
+    assert pio.dataset_memo(spark, tmp_dataset, "t", lambda: "new") == "new"
+    assert pio.dataset_memo(spark, other, "t", lambda: "rebuilt") == "keep"
+    app = spark.sparkContext.applicationId
+    assert memo.pop((app, other, "t")) == "keep"
+    memo.pop((app, tmp_dataset, "t"))
 
 
-def test_memo_registry_covers_model_state_dicts():
-    """The similarity model-state memos (the ADVICE r8 subjects) are
-    registered for eviction."""
+def test_dataset_memo_hits_on_falsy_values_and_nests(spark, tmp_dataset):
+    """A hit is key presence: a falsy value (a 0-row corpus count) is
+    built once. ``build`` may itself call ``dataset_memo``."""
+    from pro_etl_spark import io as pio
+
+    calls = []
+
+    def count():
+        calls.append("count")
+        return 0
+
+    def outer():
+        calls.append("outer")
+        return pio.dataset_memo(spark, tmp_dataset, "inner", count) + 1
+
+    assert pio.dataset_memo(spark, tmp_dataset, "outer", outer) == 1
+    assert pio.dataset_memo(spark, tmp_dataset, "outer", outer) == 1
+    assert pio.dataset_memo(spark, tmp_dataset, "inner", count) == 0
+    assert calls == ["outer", "count"]
+    pio.invalidate_dataset(spark, tmp_dataset)
+
+
+def test_memo_registry_covers_model_state_dicts(spark, tmp_dataset):
+    """The similarity model state (corpus count, k-means centroids, PQ
+    codebooks, PCA axes) lives in the one memo, keyed on its dataset,
+    and invalidate_dataset drops all of it."""
     from pro_etl_spark import io as pio
     from pro_etl_spark.ops import similarity as sim
 
-    for memo in (sim._N_VEC_MEMO, sim._KM_CB_MEMO, sim._PQ_CB_MEMO,
-                 sim._PCA_MODEL_MEMO):
-        assert any(memo is m for m in pio.DATASET_MEMOS)
+    sim._km_centroid_rows(spark, tmp_dataset)
+    sim._pq_codebook_rows(spark, tmp_dataset, 0)
+    sim._pca_model(spark, tmp_dataset)
+    (memo,) = pio.DATASET_MEMOS
+    tags = {k[2] for k in memo if k[1] == tmp_dataset}
+    assert {"n_vec", "km_centroids", "pq_codebooks", "pca_model"} <= tags
+    pio.invalidate_dataset(spark, tmp_dataset)
+    assert not [k for k in memo if k[1] == tmp_dataset]
 
 
 def test_view_memo_is_session_scoped(spark):
@@ -106,17 +140,46 @@ def test_view_memo_is_session_scoped(spark):
     assert spark.sql("SELECT count(*) AS n FROM events").collect()[0].n == 1000
 
 
-def test_substr_probe_memo_registered_for_eviction():
-    """The decontaminate_substring probe memo (round 11) is dataset
-    state like the similarity models: a rewritten dataset dir must not
-    keep serving stale probes after invalidate_dataset."""
+def test_substr_probe_memo_registered_for_eviction(spark, tmp_path):
+    """The decontaminate_substring probe list is dataset state like
+    the similarity models: a rewritten dataset dir must not keep
+    serving stale probes after invalidate_dataset."""
+    import pro_etl_spark
+    from pro_etl_spark import io as pio
+
+    d = str(tmp_path / "docs")
+    pathlib.Path(d).mkdir()
+    shutil.copy(f"{SF_SMOKE}/documents.parquet", f"{d}/documents.parquet")
+    pro_etl_spark.get_queries()["decontaminate_substring"](spark, d)
+    (memo,) = pio.DATASET_MEMOS
+    key = (spark.sparkContext.applicationId, d, "substr_probes")
+    assert memo[key]
+    pio.invalidate_dataset(spark, d)
+    assert key not in memo
+
+
+def test_no_module_level_memo_dicts_outside_io():
+    """One per-dataset memo: no module under pro_etl_spark/ except
+    io.py binds a module-level ``*_MEMO`` name; per-dataset state goes
+    through ``io.dataset_memo`` so it has one key layout and one
+    eviction point."""
     import pro_etl_spark
 
-    # load the full registry BEFORE touching ops.corpus: its composed
-    # oracles read other modules' ORACLES entries at import time, so a
-    # bare corpus import in a fresh process KeyErrors
-    pro_etl_spark.get_queries()
-    from pro_etl_spark import io as pio
-    from pro_etl_spark.ops import corpus
-
-    assert any(corpus._SUBSTR_PROBES_MEMO is m for m in pio.DATASET_MEMOS)
+    root = pathlib.Path(pro_etl_spark.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "io.py":
+            continue
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            else:
+                continue
+            found += [
+                f"{path.relative_to(root)}:{node.lineno} {t.id}"
+                for t in targets
+                if isinstance(t, ast.Name) and t.id.endswith("_MEMO")
+            ]
+    assert not found, found

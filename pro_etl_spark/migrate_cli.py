@@ -13,14 +13,17 @@ Pipeline (mirrors SURVEY §3.1's trace, set-based):
 2. customer XML via Spark's native XML source with an **explicit
    schema** (arrays stay arrays even for single elements), normalized
    to the canonical nested shape of SURVEY §1.5
-3. validation (delivery-day regex + '-3D' default, null checks) and
-   the OK / Not OK / Not-found reconciliation log (migrate.py:103-270)
+3. ``ops.migration.reconcile`` — validation (null checks, then the
+   delivery-day regex on the '-3D'-defaulted value) and the OK / Not OK
+   / Not-found reconciliation log (migrate.py:103-270); ``--strict``
+   filters the mapping by the same validation predicate, row by row
 4. ``apply_migration`` — the full nested-document rewrite
    (migrate.py:116-257) on the semi-join side
 5. sinks: one enveloped delta XML written as the reference's flat
    ``<output-dir>/<YYYY-MM-DD>/output-<uuid>.xml`` (migrate.py:286-293)
    + a log CSV in a sibling ``output-<uuid>-log/`` directory, and the
-   found/total summary on stdout (migrate.py:272)
+   found/total summary on stdout (migrate.py:272), counted by an
+   ``Observation`` on the log write — no extra Spark job
 
 Scale: the mapping broadcasts; the corpus never shuffles; the document
 rewrite and XML record serialization are narrow Column expressions.
@@ -33,7 +36,7 @@ import datetime
 import uuid
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     StringType,
@@ -43,11 +46,12 @@ from pyspark.sql.types import (
 
 from pro_etl_spark import xml_io
 from pro_etl_spark.ops.migration import (
-    DELIVERY_RE,
-    REASON_INVALID,
+    REASON_INVALID,  # noqa: F401  (re-exported for log consumers)
     REASON_NOT_FOUND,
-    REASON_OK,
     apply_migration,
+    first_wins,
+    reconcile,
+    validation_failure,
 )
 
 def run_ts_text() -> str:
@@ -227,56 +231,7 @@ def read_mapping_csv(spark: SparkSession, path: str) -> DataFrame:
     m = m.withColumn("current_customer_id", F.trim("current_customer_id")).withColumn(
         "delivery_day", F.trim("delivery_day")
     )
-    w = Window.partitionBy("current_customer_id").orderBy("_file", "ord")
-    return (
-        m.withColumn("rn", F.row_number().over(w))
-        .where("rn = 1")
-        .drop("rn", "ord", "_file")
-    )
-
-
-def reconcile(mapping: DataFrame, customers: DataFrame) -> DataFrame:
-    """The OK / Not OK / Not-found log (migrate.py:103-104, 259-266) —
-    semi side validated, anti side flagged, one broadcast plan."""
-    # inputs arrive normalized (trimmed) from read_mapping_csv — one
-    # normalization point keeps log, transform, and strict filter in
-    # agreement on the same keys/values
-    delivery = F.coalesce(F.nullif(F.col("delivery_day"), F.lit("")), F.lit("-3D"))
-    # 100 TB posture (same as ops.migration.reconciliation): Spark can't
-    # broadcast the preserved side of an outer join, so semi-filter the
-    # corpus by the broadcast key set first (narrow scan of the big
-    # side), then left-join the mapping against the now-small match set.
-    keys = mapping.select(F.col("current_customer_id").alias("_k"))
-    matched = (
-        customers.join(F.broadcast(keys), customers["id"] == keys["_k"], "left_semi")
-        .select(F.col("id").alias("_cid"))
-    )
-    j = mapping.join(
-        F.broadcast(matched),
-        mapping["current_customer_id"] == matched["_cid"],
-        "left",
-    )
-    missing = (
-        F.col("current_customer_id").isNull()
-        | F.col("new_customer_id").isNull()
-        | F.col("new_source_id").isNull()
-        | F.col("new_store_id").isNull()
-        | F.col("new_store_name").isNull()
-    )
-    return j.select(
-        F.col("current_customer_id").alias("current_id"),
-        F.col("new_customer_id").alias("new_id"),
-        F.when(F.col("_cid").isNull(), "Not OK")
-        .when(missing, "Not OK")
-        .when(~delivery.rlike(DELIVERY_RE), "Not OK")
-        .otherwise("OK")
-        .alias("status"),
-        F.when(F.col("_cid").isNull(), REASON_NOT_FOUND)
-        .when(missing, "Missing values! Please check CSV input file")
-        .when(~delivery.rlike(DELIVERY_RE), REASON_INVALID)
-        .otherwise(REASON_OK)
-        .alias("reason"),
-    )
+    return first_wins(m, "_file", "ord").drop("ord", "_file")
 
 
 def run(
@@ -292,8 +247,12 @@ def run(
     ``strict=False`` (default) replicates the reference's advisory
     policy (SURVEY §2.11.4): rows failing validation still flow to the
     output document, only the log flags them. ``strict=True`` excludes
-    every "Not OK" row from the output document — the log is unchanged
-    either way, so the reconciliation trail is complete in both modes.
+    every "Not OK" row from the output document by filtering the
+    mapping with the validation predicate (rows not found in the XML
+    never reach it anyway) — the log is unchanged either way, so the
+    reconciliation trail is complete in both modes. The found/total
+    summary is counted while the log CSV is written, with no extra job
+    and no cached log.
 
     ``scale=True`` switches the delta-XML sink from the reference's
     flat single file (driver stream-concat — correct for its contract,
@@ -310,20 +269,10 @@ def run(
     customers = read_customers_xml(spark, xml_path)
 
     log = reconcile(F.broadcast(mapping), customers)
-    # the log feeds the CSV sink, the summary counts, and (in strict
-    # mode) the transform filter — persist so the reconciliation join
-    # runs once, not once per consumer
-    log = log.persist()
-    transform_input = mapping
-    if strict:
-        ok_keys = log.where(F.col("status") == "OK").select(
-            F.col("current_id").alias("_ok")
-        )
-        transform_input = mapping.join(
-            F.broadcast(ok_keys),
-            mapping["current_customer_id"] == ok_keys["_ok"],
-            "left_semi",
-        )
+    # not-found rows need no filter: apply_migration inner-joins the corpus
+    transform_input = (
+        mapping.where(validation_failure().isNull()) if strict else mapping
+    )
     run_ts = run_ts_text()
     migrated = apply_migration(customers, transform_input, run_ts=run_ts)
 
@@ -333,16 +282,7 @@ def run(
     # envelope fidelity: carry the input document's root attributes
     # (xsi:schemaLocation, version attrs — migrate.py:274-284) forward
     _tag, root_attrs = xml_io.read_root_attrs(xml_path)
-    nsmap = dict(xml_io.ENFINITY_NSMAP)
-    attrs_out = {}
-    for k, v in root_attrs.items():
-        if k.startswith("{"):
-            uri, local = k[1:].split("}")
-            pfx = next((p for p, u in nsmap.items() if u == uri), None)
-            if pfx:
-                attrs_out[f"{pfx}:{local}"] = v
-        else:
-            attrs_out[k] = v
+    nsmap = xml_io.ENFINITY_NSMAP
 
     # reference file layout: output/<YYYY-MM-DD>/output-<uuid>.xml as a
     # FLAT file (migrate.py:286-293) — the XML sink is a driver-side
@@ -352,25 +292,25 @@ def run(
 
     os.makedirs(out_dir, exist_ok=True)
     if scale:
-        xml_out = f"{out_dir}/output-{run_id}-xml"
         xml_out = xml_io.write_xml_document_manifest(
-            xml_io.customer_xml(migrated), xml_out,
-            root_tag="enfinity", root_attrs=attrs_out, nsmap=nsmap,
+            xml_io.customer_xml(migrated), f"{out_dir}/output-{run_id}-xml",
+            root_attrs=root_attrs, nsmap=nsmap,
         )
     else:
         xml_out = f"{out_dir}/output-{run_id}.xml"
         xml_io.write_xml_document(
             xml_io.customer_xml(migrated), xml_out,
-            root_tag="enfinity", root_attrs=attrs_out, nsmap=nsmap,
+            root_attrs=root_attrs, nsmap=nsmap,
         )
     log_out = f"{out_dir}/output-{run_id}-log"
-    log.coalesce(1).write.mode("overwrite").option("header", True).csv(log_out)
-
-    # log is persisted and already materialized by the CSV write above,
-    # so both counts are cache hits, not re-joins
-    total = log.count()
-    found = log.where(F.col("reason") != REASON_NOT_FOUND).count()
-    log.unpersist()
+    # the found/total summary is counted by the log write itself
+    counts = Observation("migration_log")
+    log.observe(
+        counts,
+        F.count(F.lit(1)).alias("total"),
+        F.count(F.when(F.col("reason") != REASON_NOT_FOUND, 1)).alias("found"),
+    ).coalesce(1).write.mode("overwrite").option("header", True).csv(log_out)
+    found, total = counts.get["found"], counts.get["total"]
     print(f"{found}/{total} customers found in source XML")
     kind = "delta XML manifest" if scale else "delta XML"
     print(f"{kind}: {xml_out}")

@@ -2,11 +2,13 @@
 
 This is the reference's essential computation re-expressed set-based:
 a mapping table (the CSV of migrate.py:78-85) is deduplicated
-first-row-wins (J4), validated (null default + regex domain,
-migrate.py:136-150), joined against the customer corpus (the XML of
-migrate.py:88-115) and split semi/anti into OK / Not OK / Not-found log
-rows (migrate.py:259-266) — one declarative plan instead of an O(M·N)
-per-row XPath loop.
+first-row-wins (J4), validated (null checks, then the regex on the
+defaulted delivery day, migrate.py:136-150), joined against the
+customer corpus (the XML of migrate.py:88-115) and split semi/anti into
+OK / Not OK / Not-found log rows (migrate.py:259-266) — one declarative
+plan instead of an O(M·N) per-row XPath loop. ``first_wins``,
+``validation_failure`` and ``reconcile`` are the only copy of these
+rules: ``migrate_cli`` runs them on the CSV and XML inputs.
 
 The mapping table is derived *deterministically* from the flat
 ``customer`` table (per FIXTURES.md A1's edge-case inventory: unknown
@@ -32,6 +34,7 @@ DELIVERY_RE = r"^-[1-9]D$"
 REASON_OK = "Found in source XML file"
 REASON_INVALID = "Invalid value! Please check CSV input file (delivery_day)"
 REASON_NOT_FOUND = "Not found in source XML"
+REASON_MISSING = "Missing values! Please check CSV input file"
 
 
 def mapping_df(spark: SparkSession, d: str) -> DataFrame:
@@ -124,49 +127,78 @@ MAPPING_DEDUP_SQL = """
 """
 
 
-def reconciliation(spark: SparkSession, d: str) -> DataFrame:
-    """mapping → dedup first-wins → validate → broadcast-join corpus →
-    status/reason log (the whole of migrate.py:108-270 as one plan)."""
-    m = mapping_df(spark, d)
-    w = Window.partitionBy("current_customer_id").orderBy("ord", "new_store_id")
-    m = (
-        m.withColumn("rn", F.row_number().over(w))
+def first_wins(df: DataFrame, *order: str) -> DataFrame:
+    """First-row-wins dedup on the join key (J4): keep the first row per
+    ``current_customer_id`` in ``order``."""
+    w = Window.partitionBy("current_customer_id").orderBy(*order)
+    return (
+        df.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        .drop("rn", "ord")
+        .drop("rn")
     )
-    m = m.withColumn(
-        "delivery_final",
-        F.coalesce(F.nullif(F.col("delivery_day"), F.lit("")), F.lit("-3D")),
-    ).withColumn("delivery_valid", F.col("delivery_final").rlike(DELIVERY_RE))
 
-    corpus = load(spark, d, "customer").select(
-        F.col("c_custkey").cast("string").alias("id")
+
+def _delivery() -> Column:
+    """delivery_day with the reference's '-3D' default for an empty
+    value (migrate.py:143-150)."""
+    return F.coalesce(F.nullif(F.col("delivery_day"), F.lit("")), F.lit("-3D"))
+
+
+def validation_failure() -> Column:
+    """The advisory validation of a mapping row as one expression: the
+    reason it fails — a NULL in a field the migration writes, then a
+    defaulted delivery day outside ``DELIVERY_RE`` (migrate.py:136-150)
+    — or NULL when it passes."""
+    missing = (
+        F.col("current_customer_id").isNull()
+        | F.col("new_customer_id").isNull()
+        | F.col("new_source_id").isNull()
+        | F.col("new_store_id").isNull()
+        | F.col("new_store_name").isNull()
     )
+    return F.when(missing, REASON_MISSING).when(
+        ~_delivery().rlike(DELIVERY_RE), REASON_INVALID
+    )
+
+
+def reconcile(mapping: DataFrame, customers: DataFrame) -> DataFrame:
+    """The OK / Not OK / Not-found log (migrate.py:103-104, 259-266) of
+    a deduplicated mapping against a corpus with a string ``id`` column:
+    semi side validated, anti side flagged, one broadcast plan."""
     # 100 TB posture: a plain mapping-LEFT-JOIN-corpus would have to
     # shuffle the huge corpus (Spark cannot broadcast the preserved
     # side of an outer join). Instead: (1) broadcast the small key set
     # into a semi-join that filters the corpus to matched ids — a
     # narrow, shuffle-free scan of the big side; (2) left-join the
     # mapping against that now-tiny id set, broadcast on the right.
-    keys = m.select("current_customer_id")
-    matched_ids = corpus.join(
-        F.broadcast(keys), corpus.id == keys.current_customer_id, "left_semi"
+    keys = mapping.select(F.col("current_customer_id").alias("_k"))
+    matched = customers.join(
+        F.broadcast(keys), customers["id"] == keys["_k"], "left_semi"
+    ).select(F.col("id").alias("_cid"))
+    j = mapping.join(
+        F.broadcast(matched),
+        mapping["current_customer_id"] == matched["_cid"],
+        "left",
     )
-    joined = m.join(
-        F.broadcast(matched_ids), m.current_customer_id == matched_ids.id, "left"
-    )
-    return joined.select(
+    found = F.col("_cid").isNotNull()
+    failure = validation_failure()
+    return j.select(
         F.col("current_customer_id").alias("current_id"),
         F.col("new_customer_id").alias("new_id"),
-        F.when(F.col("id").isNull(), "Not OK")
-        .when(~F.col("delivery_valid"), "Not OK")
-        .otherwise("OK")
-        .alias("status"),
-        F.when(F.col("id").isNull(), REASON_NOT_FOUND)
-        .when(~F.col("delivery_valid"), REASON_INVALID)
-        .otherwise(REASON_OK)
+        F.when(found & failure.isNull(), "OK").otherwise("Not OK").alias("status"),
+        F.when(~found, REASON_NOT_FOUND)
+        .otherwise(F.coalesce(failure, F.lit(REASON_OK)))
         .alias("reason"),
     )
+
+
+def reconciliation(spark: SparkSession, d: str) -> DataFrame:
+    """mapping → dedup first-wins → validate → broadcast-join corpus →
+    status/reason log (the whole of migrate.py:108-270 as one plan)."""
+    corpus = load(spark, d, "customer").select(
+        F.col("c_custkey").cast("string").alias("id")
+    )
+    return reconcile(first_wins(mapping_df(spark, d), "ord", "new_store_id"), corpus)
 
 
 @register(
@@ -287,7 +319,7 @@ def apply_migration(
     # against the select's own aliases (verified on Spark 4.1)
     old_id = nested["id"]
     new_id = mapping["new_customer_id"]
-    delivery = F.coalesce(F.nullif(F.col("delivery_day"), F.lit("")), F.lit("-3D"))
+    delivery = _delivery()
     mandatory = F.lower(F.col("mandatory_reference"))
 
     def rewrite_attr(a: Column) -> Column:
@@ -391,9 +423,7 @@ def migration_transform(spark: SparkSession, d: str) -> DataFrame:
     from pro_etl_spark.ops.nested import nested_customers
 
     nested = nested_customers(spark, d).drop("key")
-    m = mapping_df(spark, d)
-    w = Window.partitionBy("current_customer_id").orderBy("ord", "new_store_id")
-    m = m.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).drop("rn", "ord")
+    m = first_wins(mapping_df(spark, d), "ord", "new_store_id")
     out = apply_migration(nested, m)
     attr = lambda name: F.get(  # noqa: E731
         F.filter(F.col("custom_attributes"), lambda a: a["name"] == name), 0

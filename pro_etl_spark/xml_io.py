@@ -164,6 +164,32 @@ def customer_xml(df: DataFrame) -> DataFrame:
     return df.select(rec.alias("value"))
 
 
+def envelope_text(
+    root_tag: str,
+    root_attrs: dict[str, str] | None = None,
+    nsmap: dict[str, str] | None = None,
+) -> tuple[str, str]:
+    """The document's header (declaration + root open tag with the
+    ``xmlns`` declarations and root attributes) and its footer.
+
+    Root attribute keys in ``prefix:local`` form pass through; Clark
+    ``{uri}local`` keys, as ``read_root_attrs`` returns them, take the
+    ``nsmap`` prefix bound to the uri and are dropped when none is."""
+    nsmap = nsmap or {}
+    ns = "".join(f' xmlns:{p}="{u}"' for p, u in nsmap.items())
+    ra = ""
+    for k, v in (root_attrs or {}).items():
+        if k.startswith("{"):
+            uri, local = k[1:].split("}")
+            pfx = next((p for p, u in nsmap.items() if u == uri), None)
+            if not pfx:
+                continue
+            k = f"{pfx}:{local}"
+        ra += f' {k}="{v}"'
+    header = f'<?xml version="1.0" encoding="UTF-8"?>\n<{root_tag}{ns}{ra}>'
+    return header, f"</{root_tag}>"
+
+
 def write_xml_document(
     records: DataFrame,
     out_file: str,
@@ -177,15 +203,13 @@ def write_xml_document(
     fidelity — declaration, nsmap, root attrs, pretty records)."""
     parts_dir = out_file + ".parts"
     records.write.mode("overwrite").text(parts_dir)
-    ns = "".join(f' xmlns:{p}="{u}"' for p, u in (nsmap or {}).items())
-    ra = "".join(f' {k}="{v}"' for k, v in (root_attrs or {}).items())
+    header, footer = envelope_text(root_tag, root_attrs, nsmap)
     with open(out_file, "w", encoding="utf-8") as w:
-        w.write('<?xml version="1.0" encoding="UTF-8"?>\n')
-        w.write(f"<{root_tag}{ns}{ra}>\n")
+        w.write(header + "\n")
         for part in sorted(glob.glob(os.path.join(parts_dir, "part-*"))):
             with open(part, "r", encoding="utf-8") as r:
                 shutil.copyfileobj(r, w)
-        w.write(f"</{root_tag}>\n")
+        w.write(footer + "\n")
     return out_file
 
 
@@ -218,15 +242,12 @@ def write_xml_document_manifest(
     Returns the manifest path."""
     parts_dir = os.path.join(out_dir, "parts")
     records.write.mode("overwrite").text(parts_dir)
-    ns = "".join(f' xmlns:{p}="{u}"' for p, u in (nsmap or {}).items())
-    ra = "".join(f' {k}="{v}"' for k, v in (root_attrs or {}).items())
     header = os.path.join(out_dir, "00_header.xml")
     footer = os.path.join(out_dir, "zz_footer.xml")
-    with open(header, "w", encoding="utf-8") as w:
-        w.write('<?xml version="1.0" encoding="UTF-8"?>\n')
-        w.write(f"<{root_tag}{ns}{ra}>\n")
-    with open(footer, "w", encoding="utf-8") as w:
-        w.write(f"</{root_tag}>\n")
+    texts = envelope_text(root_tag, root_attrs, nsmap)
+    for path, text in zip((header, footer), texts):
+        with open(path, "w", encoding="utf-8") as w:
+            w.write(text + "\n")
     manifest = os.path.join(out_dir, "MANIFEST")
     ordered = (
         [header]
@@ -401,10 +422,7 @@ def write_xml_document_sharded(
     arithmetic assignment here."""
     import pyspark.sql.functions as F
 
-    ns = "".join(f' xmlns:{p}="{u}"' for p, u in (nsmap or {}).items())
-    ra = "".join(f' {k}="{v}"' for k, v in (root_attrs or {}).items())
-    header = f'<?xml version="1.0" encoding="UTF-8"?>\n<{root_tag}{ns}{ra}>'
-    footer = f"</{root_tag}>"
+    header, footer = envelope_text(root_tag, root_attrs, nsmap)
 
     col = records.columns[0]
     if shard_assign is not None:

@@ -322,3 +322,53 @@ def test_default_input_discovery(spark, tmp_path, capsys, monkeypatch):
     printed = capsys.readouterr().out
     assert f"discovered inputs: xml={inp / 'export.xml'}" in printed
     assert "3/4 customers found in source XML" in printed
+
+
+#: 1004 is in the XML but its mapping row has no new_store_name
+FIXTURE_CSV_MISSING = FIXTURE_CSV + "1004,N1004,SRC9,ST9,,true,-3D\n"
+
+
+def test_missing_values_advisory_and_strict(spark, tmp_path):
+    """A matched row with an empty required field is logged "Not OK"
+    with the missing-values reason; advisory mode still migrates it,
+    strict mode drops it from the document and logs the same trail."""
+    xml = tmp_path / "export.xml"
+    csv = tmp_path / "mapping.csv"
+    xml.write_text(FIXTURE_XML, encoding="utf-8")
+    csv.write_text(FIXTURE_CSV_MISSING, encoding="utf-8")
+
+    def migrate(strict):
+        out = migrate_cli.run(
+            spark, str(xml), str(csv), str(tmp_path / f"out{strict}"), strict=strict
+        )
+        log = spark.read.option("header", True).csv(out["log"]).collect()
+        root = ET.parse(out["xml"]).getroot()
+        return {tuple(r) for r in log}, {c.attrib["id"] for c in root.findall("customer")}
+
+    advisory_log, advisory_ids = migrate(False)
+    strict_log, strict_ids = migrate(True)
+    assert (
+        "1004", "N1004", "Not OK", "Missing values! Please check CSV input file"
+    ) in advisory_log
+    assert advisory_ids == {"N1001", "N1002", "N1003", "N1004"}
+    assert strict_ids == {"N1001", "N1002"}
+    assert strict_log == advisory_log
+
+
+def test_header_only_mapping(spark, tmp_path, capsys):
+    """An empty migration list: 0/0 summary, a header-only log and an
+    envelope without records."""
+    xml = tmp_path / "export.xml"
+    csv = tmp_path / "mapping.csv"
+    xml.write_text(FIXTURE_XML, encoding="utf-8")
+    csv.write_text(FIXTURE_CSV.splitlines()[0] + "\n", encoding="utf-8")
+    out = migrate_cli.run(spark, str(xml), str(csv), str(tmp_path / "out"))
+    assert out["found"] == out["total"] == "0"
+    assert "0/0 customers found in source XML" in capsys.readouterr().out
+    log_text = "".join(
+        p.read_text(encoding="utf-8") for p in sorted(Path(out["log"]).glob("part-*"))
+    )
+    assert log_text == "current_id,new_id,status,reason\n"
+    root = ET.parse(out["xml"]).getroot()
+    assert root.tag == "enfinity"
+    assert root.findall("customer") == []

@@ -36,6 +36,9 @@ MAX_BUCKET = 64
 SIMHASH_BITS = 32
 SIMHASH_MAX_HAMMING = 3
 COSINE_THRESHOLD = 0.8
+#: pointer-doubling rounds ``_cc_min_label`` runs before it fails
+#: loudly: covers component diameters up to 2**CC_MAX_ROUNDS
+CC_MAX_ROUNDS = 15
 
 #: Sampled certification: the EXACT pairwise truth
 #: baselines behind the recall-certification keys (`dedup_lsh_eval`,
@@ -812,10 +815,11 @@ def dedup_clusters(spark: SparkSession, d: str) -> DataFrame:
     Spark-native iterative min-label propagation (the Pregel pattern as
     plain DataFrame ops): each round joins current labels across the
     symmetric edge list and keeps the per-node min; converges in
-    O(diameter) rounds (bounded at 15; near-dup components are
-    low-diameter in practice). Each round is one shuffle; lineage is
-    truncated with localCheckpoint so plans don't grow exponentially —
-    the same loop runs at 100 TB (this is how GraphFrames/GraphX do CC).
+    O(diameter) rounds (bounded at ``CC_MAX_ROUNDS``; near-dup
+    components are low-diameter in practice). Each round is one
+    shuffle; lineage is truncated with localCheckpoint so plans don't
+    grow exponentially — the same loop runs at 100 TB (this is how
+    GraphFrames/GraphX do CC).
     Convergence probe: labels only ever decrease, so SUM(label) is
     stationary iff the labeling is — one cheap agg over the checkpointed
     frame per round instead of a join.
@@ -835,6 +839,16 @@ def dedup_clusters(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
+def sym_edges(pairs: DataFrame) -> DataFrame:
+    """The undirected pair graph as a symmetric edge list: every
+    ``(doc_a, doc_b)`` pair in both directions, as ``(src, dst)``."""
+    return pairs.select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    ).unionAll(
+        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    )
+
+
 def _cc_min_label(pairs: DataFrame) -> DataFrame:
     """Connected components over a verified pair table via min-label
     propagation WITH pointer doubling (the Pregel pattern as plain
@@ -847,9 +861,9 @@ def _cc_min_label(pairs: DataFrame) -> DataFrame:
        itself a node pointing at an equal-or-smaller label). This is
        pointer doubling: the distance to the component minimum halves
        every round, so convergence is O(log diameter) rounds, not
-       O(diameter) — a 15-round cap covers diameters past 2¹⁵ (the
-       round-7 scale probe surfaced a >15-diameter chain in the sparse
-       embedding pair graph at sf0.1 that pure propagation missed).
+       O(diameter) — the ``CC_MAX_ROUNDS`` cap covers diameters up to
+       2**CC_MAX_ROUNDS (the sparse embedding pair graph at sf0.1 has
+       a chain longer than 15 hops, which pure propagation missed).
 
     Two keyed shuffles per round over the pair-graph NODES only;
     lineage truncated with localCheckpoint so plans don't grow
@@ -859,14 +873,10 @@ def _cc_min_label(pairs: DataFrame) -> DataFrame:
     labeling is — one cheap agg over the checkpointed frame per round,
     not a join. Returns (doc_id, cluster_id, is_survivor), survivor =
     min id."""
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).toDF("src", "dst")
     # lazy: the first round's convergence-probe collect materializes
-    # the edge RDD along with round 1 in ONE job (r12; the former
-    # eager checkpoint was a separate job per barrier — two jobs per
-    # round for one round's bytes)
-    edges = edges.localCheckpoint(eager=False)
+    # the edge RDD along with round 1 in one job; an eager checkpoint
+    # would be a job of its own
+    edges = sym_edges(pairs).localCheckpoint(eager=False)
 
     def label_sum(lbl: DataFrame):
         # DECIMAL(38) accumulator: immune to long overflow even with
@@ -891,7 +901,7 @@ def _cc_min_label(pairs: DataFrame) -> DataFrame:
     prev_sum = None
     labels = None
     changed = 1
-    for _ in range(15):
+    for _ in range(CC_MAX_ROUNDS):
         if labels is None:
             hop = (
                 edges.groupBy(F.col("dst").alias("node"))
@@ -931,8 +941,9 @@ def _cc_min_label(pairs: DataFrame) -> DataFrame:
         # (a huge-diameter component would otherwise silently yield
         # multiple survivors per real cluster)
         raise RuntimeError(
-            "min-label propagation did not converge within 15 doubling "
-            "rounds — component diameter exceeds 2^15; raise the cap"
+            f"min-label propagation did not converge within {CC_MAX_ROUNDS} "
+            f"doubling rounds — component diameter exceeds 2^{CC_MAX_ROUNDS}; "
+            "raise CC_MAX_ROUNDS"
         )
     return labels.select(
         F.col("node").alias("doc_id"),

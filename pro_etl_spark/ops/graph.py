@@ -1,25 +1,35 @@
-"""Graph analytics over the near-dup similarity graph: PageRank.
+"""Graph analytics over the near-dup similarity graph.
 
-Second iterative-algorithm family next to ``dedup_clusters``'
-connected components (same Pregel-style shape: bounded driver loop,
-one shuffle per round, no driver-side data). Nodes are the documents
-that appear in any MinHash-LSH near-dup pair; edges are the pairs,
-undirected. PageRank scores then rank each duplicate-cluster's
-members by connectivity — a principled "which copy is canonical"
-signal for dedup survivor selection, vs. the arbitrary min-id rule.
+Nodes are the documents that appear in any MinHash-LSH near-dup pair
+(``dedup_minhash_lsh``); edges are the pairs, undirected (``sym_edges``
+gives both directions) except for HITS, which keeps the id-oriented
+``doc_a < doc_b`` digraph. Twelve keys read this graph:
 
-Cross-engine exactness for an iterative float algorithm:
-- the per-node neighbor sum rides DECIMAL(38,30) (order-independent
-  exact addition) and is cast back to double once per round — the
-  same trick the aggregate family uses, applied per iteration;
-- the oracle unrolls the identical rounds as chained CTEs (standard
+- structure: degree distribution, assortativity, triangles and
+  clustering coefficient, neighborhood-Jaccard link suggestions;
+- centrality (which copy of a duplicate cluster is canonical):
+  PageRank, personalized PageRank, HITS, landmark closeness;
+- communities: k-core peeling, label propagation and its modularity;
+- reachability: multi-source BFS hop distances.
+
+The iterative keys are Pregel-style fixed unrolls: keyed shuffles
+per round, lineage truncated with ``localCheckpoint``, no driver-side
+data. BFS, personalized PageRank and closeness share one seed pick
+(``_smallest_nodes``); BFS and closeness share one frontier relaxation
+(``_relax``).
+
+Cross-engine exactness for iterative algorithms:
+- float neighbor sums ride DECIMAL(38,30) (order-independent exact
+  addition) and are cast back to double once per round; the other
+  loops use integer math only;
+- each oracle unrolls the identical rounds as chained CTEs (standard
   SQL forbids aggregation inside a recursive CTE member), so both
-  engines run literally the same 5 damped-sum updates.
+  engines run literally the same updates.
 
-Scale: each round is one shuffle keyed by node id (edges × ranks
-equi-join + groupBy). Round count is fixed and small; at 100 TB the
-edge table is the persisted LSH output and each round is a co-located
-join when both sides are bucketed by node.
+Scale: each round shuffles by node id. Round counts are
+fixed and small; at 100 TB the edge table is the persisted LSH output
+and each round is a co-located join when both sides are bucketed by
+node.
 """
 
 from __future__ import annotations
@@ -27,7 +37,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from pro_etl_spark.ops.dedup import _LSH_PAIRS_CTE, dedup_minhash_lsh
+from pro_etl_spark.ops.dedup import _LSH_PAIRS_CTE, dedup_minhash_lsh, sym_edges
 from pro_etl_spark.registry import register
 
 DAMPING = 0.85
@@ -78,10 +88,7 @@ def graph_pagerank(spark: SparkSession, d: str) -> DataFrame:
     ≥ 1, so there is no dangling-mass term; each round is
     contributions (rank/degree) shuffled to the neighbor and summed
     through DECIMAL for order independence."""
-    pairs = dedup_minhash_lsh(spark, d).select("doc_a", "doc_b")
-    edges = pairs.selectExpr("doc_a AS src", "doc_b AS dst").unionByName(
-        pairs.selectExpr("doc_b AS src", "doc_a AS dst")
-    )
+    edges = sym_edges(dedup_minhash_lsh(spark, d))
     deg = edges.groupBy("src").agg(F.count("*").alias("d"))
     # the weighted edge list and node set are re-read every round (5
     # joins each): truncate their lineage once so each round shuffles
@@ -104,13 +111,11 @@ def graph_pagerank(spark: SparkSession, d: str) -> DataFrame:
         sums = contrib.groupBy("dst").agg(
             F.sum(F.col("c").cast(_DEC30)).cast("double").alias("s")
         )
-        # the edge list is SYMMETRIC (both directions of every LSH
-        # pair), so every node has an incoming edge and `sums` already
-        # covers the exact node set: the former `nodes ⋈ sums` inner
-        # join was an identity costing two exchanges per round (guide
-        # §2.4 — remove shuffles outright). The oracle's
-        # `nodes n JOIN edges e ON e.dst = n.node` reduces to the same
-        # set, so values are untouched.
+        # the edge list is symmetric, so every node has an incoming
+        # edge and `sums` already covers the exact node set: joining
+        # back to `nodes` would be an identity costing two exchanges
+        # per round (the oracle's `nodes n JOIN edges e ON e.dst =
+        # n.node` reduces to the same set)
         r = sums.crossJoin(F.broadcast(nn)).select(
             F.col("dst").alias("node"),
             ((1 - DAMPING) / F.col("n") + DAMPING * F.col("s")).alias("r"),
@@ -417,16 +422,7 @@ def graph_label_propagation(spark: SparkSession, d: str) -> DataFrame:
     (node, label) count and a per-node MIN(STRUCT) argmax — both hash
     aggregates with map-side partials, no per-node sort. Lineage is
     truncated per round (the ``dedup_clusters`` discipline)."""
-    pairs = dedup_minhash_lsh(spark, d)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(
-            pairs.select(
-                F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-            )
-        )
-        .localCheckpoint(eager=False)
-    )
+    edges = sym_edges(dedup_minhash_lsh(spark, d)).localCheckpoint(eager=False)
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -436,13 +432,10 @@ def graph_label_propagation(spark: SparkSession, d: str) -> DataFrame:
         ).select(F.col("dst").alias("node"), "label")
         counts = cand.groupBy("node", "label").agg(F.count("*").alias("cnt"))
         # most-frequent-neighbor-label pick: MIN(STRUCT(-cnt, label))
-        # is the identical deterministic (cnt DESC, label ASC)
-        # tie-break computed as a hash aggregate with map-side partials
-        # on the same node-keyed exchange — the former
-        # `row_number() OVER (PARTITION BY node ORDER BY ...)` paid a
-        # full sort of every (node, label) cell per round (guide §2.3
-        # "aggregate before you shuffle"). Values unchanged (the
-        # oracle keeps the ROW_NUMBER form; same winner per node).
+        # is the oracle's ROW_NUMBER (cnt DESC, label ASC) winner,
+        # computed as a hash aggregate with map-side partials on the
+        # node-keyed exchange instead of a per-round sort of every
+        # (node, label) cell
         labels = (
             counts.groupBy("node")
             .agg(
@@ -462,6 +455,34 @@ def graph_label_propagation(spark: SparkSession, d: str) -> DataFrame:
 
 BFS_ROUNDS = 3
 BFS_SEEDS = 5
+
+
+def _smallest_nodes(edges: DataFrame, k: int) -> DataFrame:
+    """The ``k`` smallest node ids of a symmetric edge list, as
+    ``node``: the deterministic seed set of BFS, personalized PageRank
+    and closeness (the oracles' ``ORDER BY node LIMIT k``)."""
+    return edges.select(F.col("src").alias("node")).distinct().orderBy("node").limit(k)
+
+
+def _relax(edges: DataFrame, dist: DataFrame, rounds: int) -> DataFrame:
+    """``rounds`` BFS frontier relaxations over a symmetric edge list:
+    dist(node) = MIN(own dist, any neighbor's dist + 1), kept per node
+    and per any key column ``dist`` carries before ``node`` (closeness
+    carries its landmark ``lm``). Integer math, so every round is exact
+    in both engines; nodes never reached stay absent. Lineage is
+    truncated lazily once per round, like the other unrolled loops."""
+    keys = [c for c in dist.columns if c not in ("node", "dist")]
+    for _ in range(rounds):
+        relaxed = edges.join(dist, edges["src"] == dist["node"], "inner").select(
+            *keys, F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist")
+        )
+        dist = (
+            dist.unionAll(relaxed)
+            .groupBy(*keys, "node")
+            .agg(F.min("dist").alias("dist"))
+            .localCheckpoint(eager=False)
+        )
+    return dist
 
 
 def _bfs_oracle() -> str:
@@ -509,33 +530,9 @@ def graph_bfs_distances(spark: SparkSession, d: str) -> DataFrame:
     Scale: per round one keyed shuffle (frontier ⋈ edges + per-node
     MIN) exactly like ``graph_pagerank``'s update; the frontier table
     only ever holds reached nodes. Lineage truncated per round."""
-    pairs = dedup_minhash_lsh(spark, d)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(
-            pairs.select(
-                F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-            )
-        )
-        .localCheckpoint(eager=False)
-    )
-    dist = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .orderBy("node")
-        .limit(BFS_SEEDS)
-        .select("node", F.lit(0).alias("dist"))
-    )
-    for _ in range(BFS_ROUNDS):
-        relaxed = edges.join(
-            dist, edges["src"] == dist["node"], "inner"
-        ).select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-        dist = (
-            dist.unionAll(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
+    edges = sym_edges(dedup_minhash_lsh(spark, d)).localCheckpoint(eager=False)
+    seeds = _smallest_nodes(edges, BFS_SEEDS)
+    dist = _relax(edges, seeds.select("node", F.lit(0).alias("dist")), BFS_ROUNDS)
     return dist.select(
         F.col("node").alias("doc_id"), F.col("dist").cast("int").alias("hops")
     )
@@ -645,24 +642,11 @@ def graph_personalized_pagerank(spark: SparkSession, d: str) -> DataFrame:
     plus an O(1)-row total — the touched node set stays proportional
     to the seed neighborhood, not the corpus. Lineage truncated per
     round."""
-    pairs = dedup_minhash_lsh(spark, d)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-        .localCheckpoint(eager=False)
-    )
+    edges = sym_edges(dedup_minhash_lsh(spark, d)).localCheckpoint(eager=False)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("deg")
     )
-    seeds = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .orderBy("node")
-        .limit(BFS_SEEDS)
-        .localCheckpoint(eager=True)
-    )
+    seeds = _smallest_nodes(edges, BFS_SEEDS).localCheckpoint(eager=True)
     m = seeds.select(
         "node", F.lit(1000000 // BFS_SEEDS).cast("long").alias("m")
     )
@@ -868,10 +852,7 @@ def graph_assortativity(spark: SparkSession, d: str) -> DataFrame:
     table is |nodes|, tiny next to the corpus); the moment aggregate
     is a single global row. No all-pairs anything — cost is bounded by
     the pair table the LSH stage already materialized."""
-    pairs = dedup_minhash_lsh(spark, d).select("doc_a", "doc_b")
-    edges = pairs.selectExpr("doc_a AS src", "doc_b AS dst").unionAll(
-        pairs.selectExpr("doc_b AS src", "doc_a AS dst")
-    )
+    edges = sym_edges(dedup_minhash_lsh(spark, d))
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("d")
     )
@@ -907,7 +888,6 @@ def graph_assortativity(spark: SparkSession, d: str) -> DataFrame:
 
 
 HITS_ROUNDS = 3
-_DEC30H = "decimal(38,30)"
 
 
 def _hits_oracle() -> str:
@@ -1001,7 +981,7 @@ def graph_hits(spark: SparkSession, d: str) -> DataFrame:
         ad = (
             e.join(h, e.src == h.node)
             .groupBy(F.col("dst").alias("anode"))
-            .agg(F.sum(F.col("h").cast(_DEC30H)).alias("s"))
+            .agg(F.sum(F.col("h").cast(_DEC30)).alias("s"))
             .localCheckpoint(eager=False)
         )
         at = ad.agg(F.sum("s").alias("t"))
@@ -1014,7 +994,7 @@ def graph_hits(spark: SparkSession, d: str) -> DataFrame:
         hd = (
             e.join(a, e.dst == a.node)
             .groupBy(F.col("src").alias("hnode"))
-            .agg(F.sum(F.col("a").cast(_DEC30H)).alias("s"))
+            .agg(F.sum(F.col("a").cast(_DEC30)).alias("s"))
             .localCheckpoint(eager=False)
         )
         ht = hd.agg(F.sum("s").alias("t"))
@@ -1101,33 +1081,13 @@ def graph_closeness_landmarks(spark: SparkSession, d: str) -> DataFrame:
     per-(lm, node) MIN), lineage truncated per round. L and the hop
     horizon are constants, so the whole job is O(rounds · |E| · L /
     cluster)."""
-    pairs = dedup_minhash_lsh(spark, d)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(
-            pairs.select(
-                F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-            )
-        )
-        .localCheckpoint(eager=False)
+    edges = sym_edges(dedup_minhash_lsh(spark, d)).localCheckpoint(eager=False)
+    landmarks = _smallest_nodes(edges, CLOSENESS_LANDMARKS)
+    dist = _relax(
+        edges,
+        landmarks.select(F.col("node").alias("lm"), "node", F.lit(0).alias("dist")),
+        CLOSENESS_ROUNDS,
     )
-    dist = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .orderBy("node")
-        .limit(CLOSENESS_LANDMARKS)
-        .select(F.col("node").alias("lm"), "node", F.lit(0).alias("dist"))
-    )
-    for _ in range(CLOSENESS_ROUNDS):
-        relaxed = edges.join(
-            dist, edges["src"] == dist["node"], "inner"
-        ).select("lm", F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-        dist = (
-            dist.unionAll(relaxed)
-            .groupBy("lm", "node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
     return dist.groupBy(F.col("node").alias("doc_id")).agg(
         F.count_if(F.col("dist") > 0).cast("long").alias("n_reached"),
         F.sum("dist").cast("long").alias("sum_hops"),

@@ -12,7 +12,7 @@ pruning.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from pro_etl_spark.io import dataset_memo, load
 from pro_etl_spark.ops.dedup import (
@@ -1840,6 +1840,65 @@ def _pca_corpus(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
+def _centered(mu: list[float]) -> Column:
+    """The row's embedding minus the mean vector ``mu``, per dim."""
+    mu_arr = F.array(*[F.lit(m) for m in mu])
+    return F.zip_with(F.col("emb"), mu_arr, lambda x, m: x - m)
+
+
+def _pca_score(mu: list[float], v: list[float]) -> Column:
+    """The row's score on direction ``v``: the centered dot product
+    folded left to right in dim order, like the oracle's
+    ``_PCA_DOT_V``. Training passes and scoring queries use it alike."""
+    v_arr = F.array(*[F.lit(x) for x in v])
+    return F.aggregate(
+        F.zip_with(_centered(mu), v_arr, lambda c, w: c * w),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _pca_power_pass(e: DataFrame, mu: list[float], v: list[float]) -> list[float]:
+    """One distributed power-iteration pass, C·v without the
+    covariance: per dim, the sum over rows of score·centered. Each
+    term floor-quantizes to a 1e-12 grid (exact binary in both
+    engines) and adds as DECIMAL(38,0), so the sums are exact and
+    order-independent. Collected as 64 doubles in dim order."""
+    rows = (
+        e.select(
+            _pca_score(mu, v).alias("t"),
+            F.posexplode(_centered(mu)).alias("pos", "c"),
+        )
+        .groupBy("pos")
+        .agg(
+            (
+                F.sum(
+                    F.floor(
+                        F.col("t") * F.col("c") * F.lit(1_000_000_000_000)
+                        + F.lit(0.5)
+                    ).cast("decimal(38,0)")
+                ).cast("double")
+                / F.lit(1_000_000_000_000.0)
+            ).alias("s")
+        )
+        .collect()
+    )
+    s = [0.0] * 64
+    for r in rows:
+        s[r["pos"]] = r["s"]
+    return s
+
+
+def _normalized(s: list[float]) -> list[float]:
+    """``s`` divided by its L2 norm, the squares summed in dim order
+    like the oracle's list_reduce."""
+    acc = 0.0
+    for x in s:
+        acc += x * x
+    nrm = acc**0.5
+    return [x / nrm for x in s]
+
+
 def _pca_model(spark: SparkSession, d: str):
     """Train (mu, v) by PCA_ITERS power-iteration rounds — the
     kmeans_train pattern applied to linear algebra: each round is two
@@ -1881,38 +1940,7 @@ def _pca_model(spark: SparkSession, d: str):
             mu[r["pos"]] = r["m"]
         v = [_PCA_V0] * 64
         for _ in range(PCA_ITERS):
-            mu_arr = F.array(*[F.lit(m) for m in mu])
-            v_arr = F.array(*[F.lit(x) for x in v])
-            centered = F.zip_with(F.col("emb"), mu_arr, lambda x, m: x - m)
-            t = F.aggregate(
-                F.zip_with(centered, v_arr, lambda c, w: c * w),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            s_rows = (
-                e.select(t.alias("t"), F.posexplode(centered).alias("pos", "c"))
-                .groupBy("pos")
-                .agg(
-                    (
-                        F.sum(
-                            F.floor(
-                                F.col("t") * F.col("c") * F.lit(1_000_000_000_000)
-                                + F.lit(0.5)
-                            ).cast("decimal(38,0)")
-                        ).cast("double")
-                        / F.lit(1_000_000_000_000.0)
-                    ).alias("s")
-                )
-                .collect()
-            )
-            s = [0.0] * 64
-            for r in s_rows:
-                s[r["pos"]] = r["s"]
-            acc = 0.0
-            for x in s:  # dim-ordered fold, mirroring the oracle's list_reduce
-                acc += x * x
-            nrm = acc**0.5
-            v = [x / nrm for x in s]
+            v = _normalized(_pca_power_pass(e, mu, v))
         return mu, v
 
     return dataset_memo(spark, d, "pca_model", train)
@@ -1933,16 +1961,7 @@ def pca_power_top1(spark: SparkSession, d: str) -> DataFrame:
     bit-for-bit. At 100 TB: per round one narrow pass + one 64-row
     shuffle — the same cost envelope as ``embed_centroid``."""
     mu, v = _pca_model(spark, d)
-    e = _pca_corpus(spark, d)
-    mu_arr = F.array(*[F.lit(m) for m in mu])
-    v_arr = F.array(*[F.lit(x) for x in v])
-    centered = F.zip_with(F.col("emb"), mu_arr, lambda x, m: x - m)
-    pc1 = F.aggregate(
-        F.zip_with(centered, v_arr, lambda c, w: c * w),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return e.select("vec_id", pc1.alias("pc1"))
+    return _pca_corpus(spark, d).select("vec_id", _pca_score(mu, v).alias("pc1"))
 
 
 @register(
@@ -3738,43 +3757,12 @@ def _pca2_model(spark: SparkSession, d: str):
         mu, v1 = _pca_model(spark, d)
         e = _pca_corpus(spark, d)
         w = list(_PCA2_W0)
-        mu_arr = F.array(*[F.lit(m) for m in mu])
         for _ in range(PCA_ITERS):
-            w_arr = F.array(*[F.lit(x) for x in w])
-            centered = F.zip_with(F.col("emb"), mu_arr, lambda x, m: x - m)
-            t = F.aggregate(
-                F.zip_with(centered, w_arr, lambda c, ww: c * ww),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            s_rows = (
-                e.select(t.alias("t"), F.posexplode(centered).alias("pos", "c"))
-                .groupBy("pos")
-                .agg(
-                    (
-                        F.sum(
-                            F.floor(
-                                F.col("t") * F.col("c") * F.lit(1_000_000_000_000)
-                                + F.lit(0.5)
-                            ).cast("decimal(38,0)")
-                        ).cast("double")
-                        / F.lit(1_000_000_000_000.0)
-                    ).alias("s")
-                )
-                .collect()
-            )
-            s = [0.0] * 64
-            for r in s_rows:
-                s[r["pos"]] = r["s"]
+            s = _pca_power_pass(e, mu, w)
             proj = 0.0
             for i in range(64):  # dim-ordered fold, mirrors p{k}_t
                 proj += v1[i] * s[i]
-            o = [s[i] - proj * v1[i] for i in range(64)]
-            acc = 0.0
-            for x in o:  # dim-ordered fold, mirrors m{k}_t
-                acc += x * x
-            nrm = acc**0.5
-            w = [x / nrm for x in o]
+            w = _normalized([s[i] - proj * v1[i] for i in range(64)])
         return mu, v1, w
 
     return dataset_memo(spark, d, "pca2_model", train)
@@ -3800,19 +3788,6 @@ def pca_power_top2(spark: SparkSession, d: str) -> DataFrame:
     Scale: 2× the top-1 envelope — per round one narrow pass + one
     64-row shuffle; driver state is 192 doubles."""
     mu, v1, v2 = _pca2_model(spark, d)
-    e = _pca_corpus(spark, d)
-    mu_arr = F.array(*[F.lit(m) for m in mu])
-    v1_arr = F.array(*[F.lit(x) for x in v1])
-    v2_arr = F.array(*[F.lit(x) for x in v2])
-    centered = F.zip_with(F.col("emb"), mu_arr, lambda x, m: x - m)
-
-    def score(v_arr):
-        return F.aggregate(
-            F.zip_with(centered, v_arr, lambda c, ww: c * ww),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    return e.select(
-        "vec_id", score(v1_arr).alias("pc1"), score(v2_arr).alias("pc2")
+    return _pca_corpus(spark, d).select(
+        "vec_id", _pca_score(mu, v1).alias("pc1"), _pca_score(mu, v2).alias("pc2")
     )

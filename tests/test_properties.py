@@ -730,6 +730,45 @@ def test_bfs_distances_seed_and_bound_invariants(spark):
             assert any(hops.get(m) == h - 1 for m in nbrs[n]), (n, h)
 
 
+def test_relax_path_graph(spark):
+    """``graph._relax`` on the path 0-1-2-3-4-5 for 3 rounds: hop
+    counts from one seed stop at the horizon (nodes 4 and 5 absent),
+    and a key column keeps one frontier per landmark."""
+    from pro_etl_spark.ops.dedup import sym_edges
+    from pro_etl_spark.ops.graph import _relax
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)], "doc_a long, doc_b long"
+    )
+    edges = sym_edges(pairs)
+    seed = spark.createDataFrame([(0, 0)], "node long, dist int")
+    got = {r.node: r.dist for r in _relax(edges, seed, 3).collect()}
+    assert got == {0: 0, 1: 1, 2: 2, 3: 3}
+    lms = spark.createDataFrame([(0, 0, 0), (5, 5, 0)], "lm long, node long, dist int")
+    got = {(r.lm, r.node): r.dist for r in _relax(edges, lms, 3).collect()}
+    assert got == {
+        (0, 0): 0, (0, 1): 1, (0, 2): 2, (0, 3): 3,
+        (5, 5): 0, (5, 4): 1, (5, 3): 2, (5, 2): 3,
+    }
+
+
+def test_cc_min_label_fails_loudly_past_round_cap(spark, monkeypatch):
+    """A component that does not converge within ``CC_MAX_ROUNDS``
+    raises instead of returning a partial labeling; under the default
+    cap the same chain converges to one cluster."""
+    from pro_etl_spark.ops import dedup
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(4)], "doc_a long, doc_b long"
+    )
+    labels = dedup._cc_min_label(pairs).collect()
+    assert {r.cluster_id for r in labels} == {0}
+    assert len(labels) == 5
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="within 1 doubling rounds"):
+        dedup._cc_min_label(pairs)
+
+
 def test_listagg_ordered_and_consistent(spark):
     """nations_csv must be ascending-sorted, its element count must
     equal n_nations, and the 5-region/25-nation TPC-H shape holds."""
